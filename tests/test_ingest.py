@@ -2,11 +2,18 @@
 
 import hashlib
 
-from pyspark.sql import functions as F
+import numpy as np
 
 from webgraph_spark.graph import build_graph, dense_ids, out_degrees, successors
-from webgraph_spark.ingest import derive_edges, with_sha
+from webgraph_spark.ingest import with_sha
 from webgraph_spark.synth import synth_sources
+
+
+def _named_edges(sources):
+    """build_graph edges mapped back to (src_repo, src_path, dst_repo, dst_path)."""
+    vertices, edges = build_graph(sources)
+    name = {r.vertex_id: (r.repo, r.path) for r in vertices.collect()}
+    return [(*name[r.src], *name[r.dst]) for r in edges.collect()]
 
 
 def test_synth_deterministic_across_parallelism(spark):
@@ -27,19 +34,12 @@ def test_sha256_row_invariant(spark):
         assert r.content_sha == hashlib.sha256(r.content.encode()).hexdigest()
 
 
-def test_derive_edges_no_dups_no_self(spark):
+def test_build_graph_edges_no_dups_no_self(spark):
     src = synth_sources(spark, 12, 10, seed=42)
-    e = derive_edges(src)
-    n = e.count()
-    assert n > 50  # graph is non-trivial
-    assert e.dropDuplicates().count() == n
-    assert (
-        e.filter(
-            (F.col("src_repo") == F.col("dst_repo"))
-            & (F.col("src_path") == F.col("dst_path"))
-        ).count()
-        == 0
-    )
+    e = _named_edges(src)
+    assert len(e) > 50  # graph is non-trivial
+    assert len(set(e)) == len(e)
+    assert not [r for r in e if r[:2] == r[2:]]
 
 
 def test_edges_match_python_parser(spark):
@@ -68,26 +68,75 @@ def test_edges_match_python_parser(spark):
                 tgt = keys[k]
                 if (r.repo, r.path) != tgt:
                     expected.add((r.repo, r.path, *tgt))
-    got = {
-        (r.src_repo, r.src_path, r.dst_repo, r.dst_path)
-        for r in derive_edges(src).collect()
-    }
-    assert got == expected
+    assert set(_named_edges(src)) == expected
 
 
 def test_dense_ids_are_dense_and_deterministic(spark):
     src = synth_sources(spark, 15, 8, seed=42)
     keys = src.select("repo", "path")
-    ids1 = dense_ids(keys, ["repo", "path"], num_partitions=3)
-    ids2 = dense_ids(keys, ["repo", "path"], num_partitions=17)
-    r1 = sorted((r.repo, r.path, r.vertex_id) for r in ids1.collect())
-    r2 = sorted((r.repo, r.path, r.vertex_id) for r in ids2.collect())
-    assert r1 == r2
+    r1, r3, r17 = (
+        sorted((r.repo, r.path, r.vertex_id)
+               for r in dense_ids(keys, ["repo", "path"], num_partitions=p).collect())
+        for p in (1, 3, 17)
+    )
+    assert r1 == r3 == r17
     got_ids = sorted(x[2] for x in r1)
     assert got_ids == list(range(120))  # dense 0..n-1
     # ids follow sorted key order (global rank)
     in_order = sorted(r1, key=lambda x: (x[0], x[1]))
     assert [x[2] for x in in_order] == list(range(120))
+
+
+def _ids(df, key_cols, p):
+    return sorted(
+        (*(r[c] for c in key_cols), r.vertex_id)
+        for r in dense_ids(df, key_cols, num_partitions=p).collect()
+    )
+
+
+def test_dense_ids_more_partitions_than_keys(spark):
+    """Most range partitions stay empty; offsets still cover every id."""
+    df = spark.createDataFrame([("b",), ("a",), ("c",), ("a",)], "k string")
+    assert _ids(df, ["k"], 64) == [("a", 0), ("b", 1), ("c", 2)]
+
+
+def test_dense_ids_single_key(spark):
+    df = spark.createDataFrame([(7,)] * 5, "k long")
+    for p in (1, 3, 17):
+        assert _ids(df, ["k"], p) == [(7, 0)]
+
+
+def test_dense_ids_negative_numeric_keys(spark):
+    """(-degree, vertex) keys as algos/order.py ranks them."""
+    rng = np.random.default_rng(3)
+    rows = [(int(-d), int(v)) for d, v in
+            zip(rng.integers(1, 9, 300), rng.integers(-50, 1000, 300))]
+    df = spark.createDataFrame(rows, "_negd long, v long")
+    want = [(*k, i) for i, k in enumerate(sorted(set(rows)))]
+    for p in (1, 3, 17):
+        assert _ids(df, ["_negd", "v"], p) == want
+
+
+def test_target_key_collision_resolves_to_lowest_id(spark):
+    """a/util.py and a/util.js share the key a/util: the import resolves
+    to the lower vertex id (util.js) at any shuffle partition count."""
+    rows = [
+        ("a", "util.py", "c1", "python", "x = 1"),
+        ("a", "util.js", "c2", "js", "y = 2"),
+        ("a", "main.py", "c3", "python", "from a.util import f"),
+        ("a", "app.js", "c4", "js", 'const u = require("a/util");'),
+    ]
+    src = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    want = {("a", "main.py", "a", "util.js"), ("a", "app.js", "a", "util.js")}
+    was = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for p in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", p)
+            assert set(_named_edges(src)) == want
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", was)
 
 
 def test_build_graph_and_point_lookup(spark):

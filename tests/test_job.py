@@ -203,6 +203,23 @@ def test_job_export_file_families(spark, tmp_path):
     assert g.num_nodes == s["n_nodes"] or g.num_nodes > 0
 
 
+def test_job_export_default_ranges_capped_on_tiny_graph(spark, tmp_path):
+    """Without --export-ranges a 60-file graph is encoded as one range,
+    not one per shuffle partition."""
+    from webgraph_spark import job
+
+    out = str(tmp_path / "eo")
+    job.run([
+        "--algorithm", "export", "--synth-files", "60",
+        "--checkpoint-dir", str(tmp_path / "ec"),
+        "--output", out, "--master", "local[8]",
+    ])
+    with open(os.path.join(out, "summary.json")) as f:
+        s = json.load(f)
+    assert s["num_ranges"] == 1
+    assert s["decode_matches"] and s["n_arcs"] > 0, s
+
+
 def test_job_stream_degrees_derived_seed_rerun_is_idempotent(spark, tmp_path):
     """r4 ADVICE: with --stream-input omitted the mode seeds derived
     edges into <output>/stream_input; a crash re-run with identical args

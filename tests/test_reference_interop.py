@@ -35,9 +35,16 @@ from webgraph_spark.bvgraph import load_bvgraph, store_bvgraph
 from webgraph_spark.bvgraph_huffman import load_huffgraph, store_huffgraph
 from webgraph_spark.zuckerli import load_zuckerli, store_zuckerli
 
-pytestmark = pytest.mark.skipif(
-    shutil.which("cargo") is None, reason="cargo not available"
-)
+from build_reference import REF_DIR
+
+pytestmark = [
+    pytest.mark.skipif(shutil.which("cargo") is None, reason="cargo not available"),
+    pytest.mark.skipif(
+        not os.path.isdir(REF_DIR),
+        reason=f"reference source tree {REF_DIR} not found "
+        "(point WGS_REFERENCE_DIR at a caba5/WebGraph checkout)",
+    ),
+]
 
 
 @pytest.fixture(scope="module")

@@ -18,7 +18,7 @@ permutation that makes the downstream BV/Zuckerli block codecs dense:
     stored many times but built once.
 
 Scale design: ranks are computed with graph.dense_ids' range-partition +
-broadcast-offset machinery — never a single-partition row_number window
+per-partition-offset machinery — never a single-partition row_number window
 (the textbook driver-bottleneck at 10^9 vertices). The BFS loop follows
 the components.py discipline: per round ONE co-partitioned join + ONE
 hash exchange for the min-aggregation, lazy localCheckpoint fused with

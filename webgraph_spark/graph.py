@@ -1,20 +1,26 @@
-"""Graph construction: deterministic dense vertex ids, edge table, degrees.
+"""Graph construction: one dense vertex dictionary, edge table, degrees.
 
 The reference assumes dense contiguous node ids 0..n-1
 (/root/reference/src/ascii_graph/mod.rs:314 indexes offsets[node]
-directly). We reproduce that with a deterministic, shuffle-scalable
-dictionary encoding: global rank of the sorted key — computed WITHOUT a
-single-partition window (range-partition, rank within partition, add
-broadcast per-partition offsets). The result is identical at any
-parallelism level, which the engine's reproducibility tests assert.
+directly). `dense_ids` assigns them as the global rank of the sorted key
+without a single-partition sort or window: one range shuffle clusters
+and orders the keys, each partition ranks its rows in place, and
+per-partition offsets turn local ranks into global ones. The result is
+identical at any parallelism level, which the reproducibility tests
+assert.
+
+`build_graph` materialises that dictionary once and resolves every
+import straight to dense ids against it: src by (repo, path), dst by the
+extension-less target key. The only edge shuffle is the (src, dst)
+dedup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webgraph_spark.ingest import derive_edges
+from webgraph_spark.ingest import extract_import_targets, file_key
 
 
 def dense_ids(
@@ -23,65 +29,65 @@ def dense_ids(
 ) -> DataFrame:
     """Assign dense ids 0..n-1 = global rank of the (distinct) sorted key.
 
-    Scale notes: avoids monotonically_increasing_id (non-dense) and a
-    global-orderBy row_number (single reducer). The per-partition window
-    only shuffles by partition id; the offset table is tiny (one row per
-    partition) and broadcast.
+    Range partitioning already clusters equal keys, so the dedup
+    aggregate and the sort reuse its exchange. monotonically_increasing_id
+    is (partition index << 33) + row number within the partition (its
+    documented layout), so after sortWithinPartitions subtracting the
+    partition bits leaves the local rank. Per-partition offsets are a
+    literal array; no window and no offset join.
     """
-    distinct = keys.select(*key_cols).dropDuplicates(key_cols)
     p = num_partitions or int(
-        distinct.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        keys.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    parted = (
-        distinct.repartitionByRange(p, *[F.col(c) for c in key_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # materialize once: `parted` is consumed by BOTH the offsets
-        # collect and the returned plan, and repartitionByRange adds a
-        # sampling pass — without this the whole upstream derivation
-        # executes three times (Spark re-runs non-materialized subplans
-        # per reference)
+    cols = [F.col(c) for c in key_cols]
+    pid = F.spark_partition_id()
+    ranked = (
+        keys.select(*cols)
+        .repartitionByRange(p, *cols)
+        .dropDuplicates(key_cols)
+        .sortWithinPartitions(*cols)
+        .select(
+            *cols, pid.alias("_pid"),
+            (F.monotonically_increasing_id()
+             - F.shiftleft(pid.cast("long"), 33)).alias("_rn"),
+        )
+        # materialised once: the offsets collect and the returned plan
+        # both read it (range sampling would otherwise re-run upstream)
         .localCheckpoint(eager=True)
     )
-    counts = parted.groupBy("_pid").count().collect()
-    offsets, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    off_df = parted.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in key_cols])
-    return (
-        parted.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(off_df), "_pid")
-        .select(*key_cols, (F.col("_rn") + F.col("_off")).alias(id_col))
+    counts = dict(ranked.groupBy("_pid").count().collect())
+    offsets, acc = [], 0
+    for i in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(i, 0)
+    off = F.array(*[F.lit(o) for o in offsets]).cast("array<bigint>")
+    return ranked.select(
+        *cols, (F.col("_rn") + F.element_at(off, F.col("_pid") + 1)).alias(id_col)
     )
 
 
 def build_graph(sources: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """sources -> (vertices(vertex_id, repo, path), edges(src, dst)).
+    """sources -> (vertices(repo, path, vertex_id), edges(src, dst)).
 
     Edge direction: importer -> imported (a link graph over files, the
     analog of the reference's ImmutableGraph adjacency,
     src/lib.rs:8-16). Vertices cover every file, including isolated ones.
+    Two files sharing a target key (a/util.py, a/util.js) resolve to the
+    lower vertex id. Both lookups broadcast the dictionary, which suits
+    dictionaries up to a few million files.
     """
-    raw = derive_edges(sources)
-    vertices = dense_ids(
-        sources.select("repo", "path").dropDuplicates(["repo", "path"]),
-        ["repo", "path"],
-    )
-    src_v = vertices.select(
-        F.col("repo").alias("src_repo"), F.col("path").alias("src_path"),
-        F.col("vertex_id").alias("src"),
-    )
-    dst_v = vertices.select(
-        F.col("repo").alias("dst_repo"), F.col("path").alias("dst_path"),
-        F.col("vertex_id").alias("dst"),
-    )
+    vertices = dense_ids(sources, ["repo", "path"])
+    src_v = vertices.select("repo", "path", F.col("vertex_id").alias("src"))
+    dst_v = vertices.groupBy(
+        file_key(F.col("repo"), F.col("path")).alias("target_key")
+    ).agg(F.min("vertex_id").alias("dst"))
     edges = (
-        raw.join(src_v, ["src_repo", "src_path"])
-        .join(dst_v, ["dst_repo", "dst_path"])
+        extract_import_targets(sources)
+        .join(F.broadcast(src_v), ["repo", "path"])
+        .join(F.broadcast(dst_v), "target_key")  # unresolved imports drop
+        .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
+        .dropDuplicates(["src", "dst"])
     )
     return vertices, edges
 

@@ -1,11 +1,14 @@
-"""Ingest stage: sha-256 row invariant + import parsing -> raw edge pairs.
+"""Ingest stage: sha-256 row invariant + import parsing -> import targets.
 
 Pipeline (SURVEY.md §7 Stage 1):
     sources(repo, path, commit, lang, content)
-      -> with_sha()      adds content_sha (per-row invariant, input_hint)
-      -> derive_edges()  regexp-extracts per-lang import targets, resolves
-                         them against the file dictionary -> (src,dst) file
-                         pairs, dedup'd, self-loops dropped.
+      -> with_sha()                adds content_sha (per-row invariant,
+                                   input_hint)
+      -> extract_import_targets()  regexp-extracts per-lang import targets
+                                   as extension-less keys (file_key form)
+
+graph.build_graph resolves the targets against the one vertex
+dictionary it builds: importer by (repo, path), target by file_key.
 
 All parsing is JVM-side (regexp_extract_all / explode) — no Python in
 the hot path. The reference's only "parser" is its ASCII adjacency
@@ -65,31 +68,3 @@ def extract_import_targets(sources: DataFrame) -> DataFrame:
     )
     return raw.select("repo", "path", target.alias("target_key"))
 
-
-def derive_edges(sources: DataFrame) -> DataFrame:
-    """Resolve imports to file pairs.
-
-    Returns (src_repo, src_path, dst_repo, dst_path), duplicate-free and
-    self-loop-free — mirroring the reference's hard invariants (sorted,
-    duplicate-free successor sets, src/webgraph/bvgraph.rs:1253-1255).
-    """
-    files = sources.select(
-        F.col("repo").alias("dst_repo"),
-        F.col("path").alias("dst_path"),
-        file_key(F.col("repo"), F.col("path")).alias("target_key"),
-    ).dropDuplicates(["target_key"])
-    imports = extract_import_targets(sources)
-    return (
-        imports.join(files, "target_key")  # unresolved imports drop (inner)
-        .select(
-            F.col("repo").alias("src_repo"),
-            F.col("path").alias("src_path"),
-            "dst_repo",
-            "dst_path",
-        )
-        .filter(
-            (F.col("src_repo") != F.col("dst_repo"))
-            | (F.col("src_path") != F.col("dst_path"))
-        )
-        .dropDuplicates(["src_repo", "src_path", "dst_repo", "dst_path"])
-    )

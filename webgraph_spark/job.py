@@ -10,8 +10,8 @@ multi-executor clusters"):
         --algorithm pagerank --source-table <path-or-iceberg-table> \
         --checkpoint-dir /ckpt/run1 --output /out/run1 [--resume]
 
-Stages: ingest (sha256 invariant) -> derive edges -> dictionary-encode
-dense vertex ids -> build CSR blocks (persisted) -> run the requested
+Stages: ingest (sha256 invariant) -> dictionary-encode dense vertex ids
+-> resolve imports to id edges -> build CSR blocks (persisted) -> run the requested
 algorithm with per-superstep checkpoints -> write results + a metrics
 JSON sidecar. Resume (--resume) restarts from the last completed
 superstep recorded in the checkpoint dir — supersteps < k are not
@@ -31,6 +31,11 @@ import os
 import sys
 import time
 
+# Default export ranges are capped at one per this many vertices: a
+# range boundary drops up to window_size reference candidates, which
+# stays below 0.2% of a range this long.
+MIN_NODES_PER_RANGE = 4096
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="webgraph_spark cluster job")
@@ -43,7 +48,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="file family for --algorithm export")
     p.add_argument("--export-ranges", type=int, default=None,
                    help="parallel encode ranges for --algorithm export "
-                        "(default: shuffle partitions; 1 = single-writer)")
+                        "(default: shuffle partitions, at most one per "
+                        "MIN_NODES_PER_RANGE vertices; 1 = single-writer)")
     p.add_argument("--ef-offsets", action="store_true",
                    help="persist Elias-Fano .offsets.ef instead of "
                         "gamma-gap .offsets on export")
@@ -162,12 +168,15 @@ def run(argv: list[str]) -> dict:
             "zuckerli": (edges_to_zuckerli, zuckerli_to_edges),
         }
         export_fn, load_fn = exporters[args.export_format]
-        _, edges = build_graph(sources)
+        vertices, edges = build_graph(sources)
         edges = edges.persist()
         n_edges = edges.count()
-        ranges = args.export_ranges or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        # each range pays a task and a compression-window reset, so a
+        # small graph gets fewer ranges than there are shuffle partitions
+        ranges = args.export_ranges or max(1, min(
+            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+            vertices.count() // MIN_NODES_PER_RANGE,
+        ))
         out_dir = os.path.join(args.output, args.export_format)
         os.makedirs(out_dir, exist_ok=True)
         base = os.path.join(out_dir, "graph")

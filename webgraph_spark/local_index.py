@@ -26,6 +26,16 @@ import numpy as np
 
 from webgraph_spark.codec import decode_one_list, varint_decode, zigzag_decode
 
+# Queries gathered per step of a batch call.
+_BATCH_CHUNK = 1 << 16
+
+
+def _spans(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the concatenated ranges [starts[i], starts[i] + lens[i])."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - (ends - lens), lens)
+
 
 class CsrLocalIndex:
     """In-memory compressed graph with O(1) random-access list decode.
@@ -137,72 +147,61 @@ class CsrLocalIndex:
     def batch_successors(self, xs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Vectorized bulk random access: returns (counts, concatenated
         successors) aligned with xs. All queried lists are decoded in a
-        few numpy passes per block instead of per-query Python."""
+        few numpy passes per block instead of per-query Python.
+
+        Counts come first, so the output is allocated once and every
+        block writes its lists straight into it, _BATCH_CHUNK queries at
+        a time: temporaries stay bounded whatever the batch size."""
         xs = np.asarray(xs, dtype=np.int64)
-        counts = np.zeros(xs.size, dtype=np.int64)
         order = np.argsort(xs, kind="stable")
         xs_sorted = xs[order]
-        blk = np.searchsorted(self._los, xs_sorted, side="right") - 1
-        per_block: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        for b in np.unique(blk):
-            if b < 0:
-                continue
-            sel = np.flatnonzero(blk == b)
-            in_range = xs_sorted[sel] <= self._his[b]
-            sel = sel[in_range]
-            if sel.size == 0:
-                continue
-            q = xs_sorted[sel]
-            k = q - self._los[b]
+        # sorted queries form one contiguous run per block
+        q_lo = np.searchsorted(xs_sorted, self._los, side="left")
+        q_hi = np.searchsorted(xs_sorted, self._his, side="right")
+        hit = np.flatnonzero(q_hi > q_lo)
+        counts = np.zeros(xs.size, dtype=np.int64)
+        for b in hit:
+            k = xs_sorted[q_lo[b]:q_hi[b]] - self._los[b]
+            ip = self._indptr[b]
+            counts[order[q_lo[b]:q_hi[b]]] = self._at(ip, k + 1) - self._at(ip, k)
+        out_starts = np.cumsum(counts) - counts
+        flat = np.empty(int(counts.sum()), dtype=np.int64)
+        for b in hit:
             ip, off, buf = self._indptr[b], self._boffs[b], self._bufs[b]
-            cnt = (self._at(ip, k + 1) - self._at(ip, k)).astype(np.int64)
-            orig_idx = order[sel]
-            counts[orig_idx] = cnt
             # dense query sets re-decode the same lists many times under
             # the per-segment gather below; once the queries cover a
             # meaningful fraction of the block (or the block is already
             # decoded), one memoized whole-block decode + slices wins
             n_blk = int(self._his[b] - self._los[b] + 1)
+            dec = None
             if (int(b) in getattr(self, "_dec_cache", {})
-                    or sel.size * 20 >= n_blk):
+                    or (q_hi[b] - q_lo[b]) * 20 >= n_blk):
                 dec = self._decoded_block(int(b))
+            for c0 in range(q_lo[b], q_hi[b], _BATCH_CHUNK):
+                c1 = min(c0 + _BATCH_CHUNK, q_hi[b])
+                idx = order[c0:c1]
+                cnt = counts[idx]
                 nz = cnt > 0
-                if nz.any():
-                    cnz = cnt[nz]
-                    seg_starts = np.cumsum(cnz) - cnz
-                    intra = (np.arange(int(cnz.sum()), dtype=np.int64)
-                             - np.repeat(seg_starts, cnz))
-                    vals = dec[np.repeat(
-                        np.asarray(self._at(ip, k[nz]), dtype=np.int64), cnz
-                    ) + intra]
-                    per_block.append((orig_idx[nz], cnz, vals))
-                continue
-            off_k = self._at(off, k)
-            seg_lens = (self._at(off, k + 1) - off_k).astype(np.int64)
-            total = int(seg_lens.sum())
-            if total == 0:
-                continue
-            # gather queried segments into one compact byte buffer
-            seg_starts = np.cumsum(seg_lens) - seg_lens
-            intra = np.arange(total, dtype=np.int64) - np.repeat(seg_starts, seg_lens)
-            compact = buf[np.repeat(off_k, seg_lens) + intra]
-            raw = varint_decode(compact)
-            # heads of each nonempty list inside the decoded value array
-            nz = cnt > 0
-            head_pos = np.cumsum(cnt[nz]) - cnt[nz]
-            vals = raw.astype(np.int64) + 1
-            vals[head_pos] = zigzag_decode(raw[head_pos]) + q[nz]
-            csum = np.cumsum(vals)
-            base = csum[head_pos] - vals[head_pos]
-            dsts = csum - np.repeat(base, cnt[nz])
-            per_block.append((orig_idx[nz], cnt[nz], dsts))
-        # scatter decoded lists into xs-aligned layout
-        out_starts = np.cumsum(counts) - counts
-        flat = np.empty(int(counts.sum()), dtype=np.int64)
-        for orig_idx, cnt, dsts in per_block:
-            seg_starts = np.cumsum(cnt) - cnt
-            intra = np.arange(dsts.size, dtype=np.int64) - np.repeat(seg_starts, cnt)
-            flat[np.repeat(out_starts[orig_idx], cnt) + intra] = dsts
+                if not nz.any():
+                    continue
+                idx, cnt = idx[nz], cnt[nz]
+                q = xs_sorted[c0:c1][nz]
+                k = q - self._los[b]
+                if dec is not None:
+                    vals = dec[_spans(np.asarray(self._at(ip, k), dtype=np.int64), cnt)]
+                else:
+                    # gather queried segments into one compact byte
+                    # buffer (empty lists own no bytes)
+                    off_k = np.asarray(self._at(off, k), dtype=np.int64)
+                    seg_lens = np.asarray(self._at(off, k + 1), dtype=np.int64) - off_k
+                    raw = varint_decode(buf[_spans(off_k, seg_lens)])
+                    head_pos = np.cumsum(cnt) - cnt
+                    vals = raw.astype(np.int64) + 1
+                    vals[head_pos] = zigzag_decode(raw[head_pos]) + q
+                    csum = np.cumsum(vals)
+                    base = csum[head_pos] - vals[head_pos]
+                    vals = csum - np.repeat(base, cnt)
+                flat[_spans(out_starts[idx], cnt)] = vals
         return counts, flat
 
     def bench_random_queries(self, n_queries: int = 1_000_000, seed: int = 7) -> dict:
@@ -380,39 +379,28 @@ class BvLocalIndex:
         blocks decode once through the lockstep kernel; per-query work
         is pure numpy gather/scatter."""
         xs = np.asarray(xs, dtype=np.int64)
-        counts = np.zeros(xs.size, dtype=np.int64)
         order = np.argsort(xs, kind="stable")
         xs_sorted = xs[order]
-        blk = np.searchsorted(self._los, xs_sorted, side="right") - 1
-        per_block: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        for b in np.unique(blk):
-            if b < 0:
-                continue
-            sel = np.flatnonzero(blk == b)
-            sel = sel[xs_sorted[sel] <= self._his[b]]
-            if sel.size == 0:
-                continue
-            k = xs_sorted[sel] - self._los[b]
-            indptr, flat = self._decoded_block(int(b))
-            cnt = indptr[k + 1] - indptr[k]
-            orig_idx = order[sel]
-            counts[orig_idx] = cnt
-            nz = cnt > 0
-            if not nz.any():
-                continue
-            cnz = cnt[nz]
-            seg_starts = np.cumsum(cnz) - cnz
-            intra = (np.arange(int(cnz.sum()), dtype=np.int64)
-                     - np.repeat(seg_starts, cnz))
-            vals = flat[np.repeat(indptr[k][nz], cnz) + intra]
-            per_block.append((orig_idx[nz], cnz, vals))
+        q_lo = np.searchsorted(xs_sorted, self._los, side="left")
+        q_hi = np.searchsorted(xs_sorted, self._his, side="right")
+        hit = np.flatnonzero(q_hi > q_lo)
+        counts = np.zeros(xs.size, dtype=np.int64)
+        for b in hit:
+            indptr, _ = self._decoded_block(int(b))
+            k = xs_sorted[q_lo[b]:q_hi[b]] - self._los[b]
+            counts[order[q_lo[b]:q_hi[b]]] = indptr[k + 1] - indptr[k]
         out_starts = np.cumsum(counts) - counts
         flat_out = np.empty(int(counts.sum()), dtype=np.int64)
-        for orig_idx, cnt, vals in per_block:
-            seg_starts = np.cumsum(cnt) - cnt
-            intra = (np.arange(vals.size, dtype=np.int64)
-                     - np.repeat(seg_starts, cnt))
-            flat_out[np.repeat(out_starts[orig_idx], cnt) + intra] = vals
+        for b in hit:
+            indptr, flat = self._decoded_block(int(b))
+            for c0 in range(q_lo[b], q_hi[b], _BATCH_CHUNK):
+                c1 = min(c0 + _BATCH_CHUNK, q_hi[b])
+                idx = order[c0:c1]
+                cnt = counts[idx]
+                nz = cnt > 0
+                k = xs_sorted[c0:c1][nz] - self._los[b]
+                flat_out[_spans(out_starts[idx[nz]], cnt[nz])] = (
+                    flat[_spans(indptr[k], cnt[nz])])
         return counts, flat_out
 
     def bench_random_queries(self, n_queries: int = 100_000, seed: int = 7) -> dict:
